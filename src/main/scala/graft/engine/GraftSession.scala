@@ -68,6 +68,9 @@ object GraftSession {
       // range-sampling job); opt-in per session via
       // spark.graft.presentationSort — see the rule's scale note
       .withExtensions(_.injectOptimizerRule(_ => graft.plans.PresentationSort))
+      // root projection of literals → one-row LocalRelation, so
+      // `SELECT 1`-class statements plan as a driver-resident scan
+      .withExtensions(_.injectOptimizerRule(_ => graft.plans.ConstantSelect))
   }
 
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),

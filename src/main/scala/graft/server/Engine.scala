@@ -3394,8 +3394,10 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
   }
 
   /** Execute one statement; returns (df-or-null, commandTag). DDL/DML
-    * run eagerly; SELECT-ish statements return a lazy DataFrame the
-    * caller pumps with toLocalIterator. */
+    * run eagerly; row-returning statements ([[Engine.returnsRows]])
+    * return a lazy DataFrame the caller pumps through [[Engine.drain]]:
+    * a result resident in the driver is collected with no Spark job,
+    * everything else streams one partition at a time. */
   def execute(sql0: String): ExecResult = {
     val st = txn.get()
     if (st.open && st.aborted &&
@@ -4300,9 +4302,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       }
     } finally createLock.foreach(_.unlock())
     val verb = sql.split("\\s+").head.toUpperCase
-    verb match {
-      case "SELECT" | "WITH" | "VALUES" | "TABLE" | "SHOW" | "DESCRIBE" | "DESC" | "EXPLAIN" | "PIVOT" | "FROM" =>
-        ExecResult(df, "SELECT")
+    if (Engine.returnsRows(sql)) ExecResult(df, "SELECT")
+    else verb match {
       case "INSERT" =>
         insertStmtRe.findFirstMatchIn(sql) match {
           case Some(m) if !isTxnOpen =>
@@ -5984,8 +5985,8 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
       StructField("std", StringType), StructField("q25", StringType),
       StructField("q50", StringType), StructField("q75", StringType),
       StructField("count", LongType), StructField("null_percentage", DecimalType(9, 2))))
-    ExecResult(spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1), schema), "SELECT")
+    // a local relation: the summary rows already sit in the driver
+    ExecResult(spark.createDataFrame(java.util.Arrays.asList(out: _*), schema), "SELECT")
   }
 
   /** Split `SET … [WHERE cond]` at the first WHERE keyword appearing at
@@ -7318,6 +7319,34 @@ final class Engine(val spark: SparkSession, val allowFileIo: Boolean = true,
 
 object Engine {
   case class ExecResult(df: DataFrame, tag: String)
+
+  private val rowVerbs =
+    Set("select", "with", "values", "table", "show", "describe", "desc", "explain", "pivot", "from")
+
+  /** Whether a statement returns a result set — the one classifier the
+    * engine's tagging, PG Parse/Describe and the CH query/exec split all
+    * use. The verb is the first word after any leading `(` and
+    * whitespace, so `(SELECT 1)` and DuckDB's FROM-first form count.
+    * PRAGMA and SUMMARIZE return rows through their intercepts but are
+    * not listed: they cannot be described without running. */
+  def returnsRows(sql: String): Boolean = {
+    val start = sql.indexWhere(c => c != '(' && !c.isWhitespace)
+    start >= 0 && rowVerbs(sql.drop(start).takeWhile(_.isLetter).toLowerCase)
+  }
+
+  /** The one result drain behind every frontend. A result already
+    * resident in the driver (its executed plan is a `LocalTableScanExec`:
+    * constant SELECTs via [[graft.plans.ConstantSelect]], SHOW intercepts,
+    * catalog views over VALUES) is collected with no Spark job —
+    * `executeCollect` hands back the rows the plan holds. Everything
+    * else streams through `toLocalIterator`, one partition resident at a
+    * time, so a 100 TB result never lands in driver memory at once. */
+  def drain(df: DataFrame): java.util.Iterator[org.apache.spark.sql.Row] =
+    df.queryExecution.executedPlan match {
+      case _: org.apache.spark.sql.execution.LocalTableScanExec =>
+        java.util.Arrays.asList(df.collect(): _*).iterator()
+      case _ => df.toLocalIterator()
+    }
 
   /** A rename failed AFTER its catalog step succeeded: the point of no
     * return is `ALTER TABLE … RENAME` (concurrent connections already

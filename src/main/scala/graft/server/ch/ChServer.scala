@@ -26,7 +26,6 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
   // auth cache: user -> (password, expiry) — amortizes PBKDF2 (A18)
   private val authCache = new ConcurrentHashMap[String, (String, Long)]()
 
-  private val selectRe = """(?is)^\s*(select|with|show|describe|desc|explain|values)\b.*""".r
   private val insertFormatRe =
     """(?is)^\s*insert\s+into\s+([\w.]+)\s*(\(([^)]*)\))?\s*format\s+(\w+)\s*$""".r
   private val formatClauseRe = """(?is)\s+format\s+(\w+)\s*$""".r
@@ -95,7 +94,7 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
       case Some(m) =>
         val cols = Option(m.group(3)).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         ingest(ex, m.group(1), cols, m.group(4), payload)
-      case None if selectRe.matches(sql) => select(ex, sql)
+      case None if Engine.returnsRows(sql) => select(ex, sql)
       case None =>
         engine.execute(sql)
         respond(ex, 200, "Ok.\n")
@@ -135,7 +134,7 @@ final class ChServer(engine: Engine, port: Int, authEnabled: Boolean,
     val out = if (gzip) new java.util.zip.GZIPOutputStream(raw, 8192) else raw
     if (res.df != null) {
       import scala.jdk.CollectionConverters._
-      Formats.write(format, res.df.schema, res.df.toLocalIterator().asScala, out)
+      Formats.write(format, res.df.schema, Engine.drain(res.df).asScala, out)
     }
     out.close()
   }

@@ -7,6 +7,7 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 
 import graft.server.Engine
 
@@ -22,19 +23,21 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
   private val in = new WireIn(socket.getInputStream)
   private val out = new WireOut(socket.getOutputStream)
 
-  private case class Stmt(sql: String, numParams: Int, df: () => DataFrame,
+  /** `schema` is the row description, analysed once at Parse: None for
+    * a statement that returns no rows. */
+  private case class Stmt(sql: String, numParams: Int, schema: Option[StructType],
       paramOids: Seq[Int] = Nil)
   private final class Portal(val stmt: Stmt, val params: Seq[Option[String]],
       val resultFmts: Seq[Int] = Nil) {
     // live cursor state for Execute.maxRows / PortalSuspended (Q7 done
     // properly — the reference ignores maxRows, pg_conn.go:509-532)
     var it: java.util.Iterator[org.apache.spark.sql.Row] = _
-    var schema: org.apache.spark.sql.types.StructType = _
+    var schema: StructType = _
     var tag: String = _
   }
 
   private final class Cursor(val it: java.util.Iterator[org.apache.spark.sql.Row],
-      val schema: org.apache.spark.sql.types.StructType) {
+      val schema: StructType) {
     var rowDescSent = false
   }
 
@@ -209,7 +212,7 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
   private def runOne(sql: String): Unit = withJobGroup {
     declareCursorRe.findFirstMatchIn(sql).foreach { m =>
       val df = engine.execute(m.group(2)).df
-      cursors(m.group(1).toLowerCase) = new Cursor(df.toLocalIterator(), df.schema)
+      cursors(m.group(1).toLowerCase) = new Cursor(Engine.drain(df), df.schema)
       out.commandComplete("DECLARE CURSOR")
       return
     }
@@ -243,14 +246,15 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
   }
 
   /** Stream a DataFrame's rows as DataRow messages; returns row count.
-    * toLocalIterator keeps one partition resident — 100 TB results never
-    * land in driver memory at once. */
+    * Rows come from [[Engine.drain]]: a result resident in the driver is
+    * collected with no Spark job; everything else streams one partition
+    * at a time, so 100 TB results never land in driver memory at once. */
   private def pump(df: DataFrame, sendRowDesc: Boolean): Long = {
     val schema = df.schema
     if (sendRowDesc)
       out.rowDescription(schema.fields.toSeq.map(f => f.name -> PgTypes.oidOf(f.dataType)))
     var n = 0L
-    val it = df.toLocalIterator()
+    val it = Engine.drain(df)
     while (it.hasNext) {
       val row = it.next()
       out.dataRow((0 until schema.length).map(i => PgTypes.render(row.get(i))))
@@ -332,17 +336,16 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
       try { val n = p.int16(); (0 until n).map(_ => p.int32()) }
       catch { case _: Throwable => Seq.empty[Int] }
     val numParams = maxParamIndex(sql)
-    val stmt = Stmt(sql, numParams,
-      // analyzeOnly: dialect rewrite + the connection's TEMP-namespace
-      // substitution (r14) — lazy analysis, no job, like spark.sql on
-      // a SELECT
-      () => engine.analyzeOnly(substituteParams(sql, Seq.fill(numParams)(None))),
-      declaredOids)
     // Parse-time validation (the reference gets this from DuckDB's
     // Prepare): analyze row-returning statements now so bad SQL errors
-    // at Parse, not Execute. Lazy analysis only — no job runs.
-    if (looksRowReturning(sql)) stmt.df().schema
-    stmts(name) = stmt
+    // at Parse, not Execute, and keep the schema for Describe.
+    // analyzeOnly: dialect rewrite + the connection's TEMP-namespace
+    // substitution (r14) — lazy analysis, no job, like spark.sql on a
+    // SELECT
+    val schema =
+      if (!Engine.returnsRows(sql)) None
+      else Some(engine.analyzeOnly(substituteParams(sql, Seq.fill(numParams)(None))).schema)
+    stmts(name) = Stmt(sql, numParams, schema, declaredOids)
     out.parseComplete()
   }
 
@@ -392,15 +395,15 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
     }
   }
 
-  private def sendDescription(stmt: Stmt, fmts: Seq[Int] = Nil): Unit = {
-    if (!looksRowReturning(stmt.sql)) { out.noData(); return }
-    // lazy analysis only — no job runs (improvement over the reference's
-    // `describe <q>` probe round-trip, pg_conn.go:652-670)
-    val schema = stmt.df().schema
-    if (schema.isEmpty) out.noData()
-    else out.rowDescription(
-      schema.fields.toSeq.map(f => f.name -> PgTypes.oidOf(f.dataType)), fmts)
-  }
+  /** The schema analysed at Parse — no job runs (improvement over the
+    * reference's `describe <q>` probe round-trip, pg_conn.go:652-670). */
+  private def sendDescription(stmt: Stmt, fmts: Seq[Int] = Nil): Unit =
+    stmt.schema match {
+      case Some(schema) if schema.nonEmpty =>
+        out.rowDescription(
+          schema.fields.toSeq.map(f => f.name -> PgTypes.oidOf(f.dataType)), fmts)
+      case _ => out.noData()
+    }
 
   private def executePortal(body: Array[Byte]): Unit = withJobGroup {
     val p = new Payload(body)
@@ -411,7 +414,7 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
       val sql = substituteParams(portal.stmt.sql, portal.params)
       val res = engine.execute(sql)
       if (res.df == null) { out.commandComplete(res.tag); return }
-      portal.it = res.df.toLocalIterator()
+      portal.it = Engine.drain(res.df)
       portal.schema = res.df.schema
       portal.tag = res.tag
     }
@@ -543,11 +546,6 @@ final class PgConnection(socket: Socket, server: PgServer) extends Runnable {
         case _ => new String(bs, UTF_8)
       }
     }
-  }
-
-  private def looksRowReturning(sql: String): Boolean = {
-    val head = sql.trim.split("\\s+").headOption.getOrElse("").toLowerCase
-    Set("select", "with", "values", "table", "show", "describe", "desc", "explain", "pivot")(head)
   }
 }
 

@@ -444,4 +444,72 @@ class PlanSpec extends SparkSpecBase {
         "presentation sort broke the top-k TakeOrderedAndProject shape")
     } finally spark.conf.set(graft.plans.PresentationSort.ConfKey, "false")
   }
+
+  // -- constant-select rewrite (graft.plans.ConstantSelect) ----------------
+
+  /** A session that plans without the rule: the pre-rewrite baseline. */
+  private lazy val withoutConstantSelect = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules", graft.plans.ConstantSelect.ruleName)
+    s
+  }
+
+  private def localRoot(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("constant SELECTs plan as a root LocalTableScan; names, types and nullability kept") {
+    for (q <- Seq("SELECT 1", "SELECT NULL, 'a' AS x, 2.5", "SELECT version()")) {
+      val on = spark.sql(q)
+      val off = withoutConstantSelect.sql(q)
+      assert(localRoot(on), s"$q: rule did not fire\n${on.queryExecution.optimizedPlan}")
+      assert(on.queryExecution.executedPlan
+        .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
+      assert(!localRoot(off), s"$q: baseline already local; the test pins nothing")
+      def shape(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.optimizedPlan.output.map(a => (a.name, a.dataType, a.nullable))
+      assert(shape(on) == shape(off), q)
+      assert(on.collect().toSeq == off.collect().toSeq, q)
+    }
+  }
+
+  test("constant-select rewrite: only literals, only at the root") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Subquery}
+    import org.apache.spark.sql.execution.CommandExecutionMode
+    assert(!localRoot(spark.sql("SELECT rand()")), "non-deterministic projection rewritten")
+    // 1/0 raises when evaluated (ANSI): it fails in the same phase with
+    // the same condition whether or not the rule is installed
+    def failure(s: org.apache.spark.sql.SparkSession): (Boolean, Seq[String]) = {
+      val df = s.sql("SELECT 1/0")
+      val atOptimize = scala.util.Try(df.queryExecution.optimizedPlan).isFailure
+      val e = intercept[Exception](df.collect())
+      (atOptimize, Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collect {
+        case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition
+      }.toSeq)
+    }
+    val div = failure(spark)
+    assert(div._2.contains("DIVIDE_BY_ZERO"), div.toString)
+    assert(div == failure(withoutConstantSelect))
+    // a scalar subquery is optimized under a Subquery root: untouched
+    val lit = spark.sql("SELECT 1").queryExecution.analyzed
+    assert(graft.plans.ConstantSelect(lit).isInstanceOf[LocalRelation])
+    val sub = Subquery(lit, correlated = false)
+    assert(graft.plans.ConstantSelect(sub) == sub)
+    val inTable = spark.sql("SELECT id, (SELECT 1) AS c FROM range(3)")
+    assert(inTable.queryExecution.optimizedPlan
+      .collectWithSubqueries { case l: LocalRelation => l }.isEmpty)
+    assert(inTable.collect().map(_.getInt(1)).toSeq == Seq(1, 1, 1))
+    // command roots: the SELECT under INSERT, CTAS and CREATE VIEW stays
+    spark.sql("DROP TABLE IF EXISTS plan_cs_t")
+    spark.sql("CREATE TABLE plan_cs_t (x INT) USING parquet")
+    try {
+      for (q <- Seq("INSERT INTO plan_cs_t SELECT 1",
+          "CREATE TABLE plan_cs_ctas USING parquet AS SELECT 1 AS x",
+          "CREATE VIEW plan_cs_v AS SELECT 1 AS x")) {
+        val plan = spark.sessionState.executePlan(
+          spark.sessionState.sqlParser.parsePlan(q), CommandExecutionMode.SKIP).optimizedPlan
+        assert(plan.find(_.isInstanceOf[LocalRelation]).isEmpty, s"$q:\n$plan")
+      }
+    } finally spark.sql("DROP TABLE IF EXISTS plan_cs_t")
+  }
 }

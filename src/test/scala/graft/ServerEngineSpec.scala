@@ -4193,4 +4193,71 @@ class ServerEngineSpec extends SparkSpecBase {
       spark.sql("DROP TABLE IF EXISTS main.ldh2_s")
     }
   }
+
+  test("row-returning classifier: leading parentheses and FROM-first") {
+    for (q <- Seq("SELECT 1", "(SELECT 1)", " ( (select 1) union all (select 2))",
+        "with t as (select 1) select * from t", "FROM nation LIMIT 1", "values(1)",
+        "show transaction isolation level", "describe nation", "table nation"))
+      assert(Engine.returnsRows(q), q)
+    for (q <- Seq("", "(", "insert into t select 1", "create view v as select 1",
+        "pragma table_info('nation')", "selectx 1"))
+      assert(!Engine.returnsRows(q), q)
+    val r = engine.execute("(SELECT 1)")
+    assert(r.tag == "SELECT")
+    assert(r.df.collect().toSeq.map(_.getInt(0)) == Seq(1))
+  }
+
+  test("drain: driver-resident results run no Spark job, scans still stream") {
+    fresh("drain_t")
+    engine.execute("create table main.drain_t (x INT) using parquet")
+    spark.read.parquet(s"$sf/nation.parquet").createOrReplaceTempView("dr_nation")
+    // Engine.bootstrap's pg_type view (VALUES-backed), without the
+    // warehouse reset bootstrap would do
+    spark.sql("CREATE OR REPLACE TEMP VIEW pg_type AS " +
+      "SELECT * FROM VALUES (16, 'bool', 0), (23, 'int4', 0) AS t(oid, typname, typcollation)")
+    val groupsWithJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groupsWithJobs.add)
+    }
+    def rows(it: java.util.Iterator[org.apache.spark.sql.Row]): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      it.asScala.map(_.toString).toSeq
+    }
+    /** Drain under its own job group; the statement is executed first,
+      * outside the group, so only the drain's jobs count. */
+    def drained(group: String, sql: String): Seq[String] = {
+      val df = engine.execute(sql).df
+      spark.sparkContext.setJobGroup(group, group)
+      try rows(Engine.drain(df)) finally spark.sparkContext.clearJobGroup()
+    }
+    val resident = Seq(
+      "SELECT 1" -> Seq("[1]"),
+      "SHOW transaction isolation level" -> Seq("[read committed]"),
+      "SELECT typname FROM pg_catalog.pg_type WHERE oid = 23" -> Seq("[int4]"),
+      ("SELECT table_name FROM information_schema.tables " +
+        "WHERE table_schema = 'main' AND table_name = 'drain_t'") -> Seq("[drain_t]"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (((sql, want), i) <- resident.zipWithIndex) {
+        assert(drained(s"drain-resident-$i", sql) == want, sql)
+        // the same rows the per-partition iterator returns
+        assert(rows(engine.execute(sql).df.toLocalIterator()) == want, sql)
+      }
+      assert(drained("drain-scan", "SELECT * FROM dr_nation").size == 25)
+      // listener events arrive in order: once the scan's job is seen,
+      // every resident drain's job (if any) has been delivered too
+      val deadline = System.currentTimeMillis() + 30000
+      while (!groupsWithJobs.contains("drain-scan") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(groupsWithJobs.contains("drain-scan"), "a table scan must stream through Spark jobs")
+      for (i <- resident.indices)
+        assert(!groupsWithJobs.contains(s"drain-resident-$i"), s"${resident(i)._1} ran a Spark job")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      engine.execute("drop table main.drain_t")
+      spark.catalog.dropTempView("pg_type")
+    }
+  }
 }

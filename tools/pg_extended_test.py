@@ -255,6 +255,22 @@ def main(port):
     c.send(msg(b"C", b"S" + cstr("sp")), msg(b"S", b""))
     c.drain_until_ready()
 
+    # 5d. Describe and Execute agree: a portal is described with a
+    # RowDescription exactly when Execute sends DataRows, parenthesised
+    # and FROM-first queries included
+    for sql in ["SELECT 1", "(SELECT 1)", "FROM nation LIMIT 1"]:
+        c.send(
+            msg(b"P", cstr("") + cstr(sql) + struct.pack(">h", 0)),
+            msg(b"B", cstr("") + cstr("") + struct.pack(">hhh", 0, 0, 0)),
+            msg(b"D", b"P" + cstr("")),
+            msg(b"E", cstr("") + struct.pack(">i", 0)),
+            msg(b"S", b""))
+        kinds = types_of(c.drain_until_ready())
+        ok = kinds == "12TDCZ"
+        print(("PASS" if ok else "FAIL") + f" describe/execute agree for {sql!r}: {kinds}")
+        if not ok:
+            failures.append(f"describe-agree:{sql}")
+
     # 6. CancelRequest: fire a slow query, cancel from a second conn
     # data-independent and reliably minutes-long uncancelled
     slow = "select sum(id) from range(20000000000)"

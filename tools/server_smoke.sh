@@ -20,6 +20,8 @@ chk() { # name, expected, actual
 }
 
 chk "pg select"       "1"        "$(psql $P -tA -c 'select 1' 2>&1)"
+# a parenthesised query is row-returning: its row comes back
+chk "pg paren select" "1"        "$(psql $P -tA -c '(select 1)' 2>&1)"
 chk "pg agg"          "25"       "$(psql $P -tA -c 'select count(*) from nation' 2>&1)"
 chk "pg types"        "t|1.50|{1,2,3}" "$(psql $P -tA -c "select true, 1.50::decimal(5,2), array(1,2,3)" 2>&1)"
 # DATE decode needs java.base/sun.util.calendar opened (run_server.sh)
@@ -61,6 +63,8 @@ fi
 CURL="curl -s -u smoke:smokepw"
 chk "ch select"       "1"        "$($CURL "http://127.0.0.1:$CH/?query=SELECT%201")"
 chk "ch version"      "23.3.1.2823" "$($CURL "http://127.0.0.1:$CH/?query=SELECT%20version()")"
+chk "ch version lc"   "23.3.1.2823" "$($CURL "http://127.0.0.1:$CH/" -d 'select version()')"
+chk "ch paren select" "1"        "$($CURL "http://127.0.0.1:$CH/" -d '(select 1)')"
 chk "ch jsoneachrow"  '{"n":0}'  "$($CURL "http://127.0.0.1:$CH/" -d 'SELECT n_nationkey AS n FROM nation ORDER BY n LIMIT 1 FORMAT JSONEachRow')"
 chk "ch limit n,m"    "NATION_2" "$($CURL "http://127.0.0.1:$CH/" -d 'SELECT n_name FROM nation ORDER BY n_nationkey LIMIT 2,1')"
 $CURL "http://127.0.0.1:$CH/" -d 'CREATE TABLE main.smoke2 (x BIGINT) USING parquet' >/dev/null
